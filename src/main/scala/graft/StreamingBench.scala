@@ -27,6 +27,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamingBench {
 
+  /** `xs` cut into exactly `min(n, xs.length)` contiguous non-empty parts
+    * whose sizes differ by at most one (`grouped(len / n)` emits n + 1
+    * parts when n does not divide the length).
+    */
+  private[graft] def splitEven[A](xs: Array[A], n: Int): Seq[Array[A]] = {
+    val parts = n.min(xs.length).max(1)
+    (0 until parts).map(i =>
+      xs.slice((i.toLong * xs.length / parts).toInt,
+        ((i + 1).toLong * xs.length / parts).toInt))
+  }
+
   def windowedCount(spark: SparkSession, sfDir: String,
                     replicas: Int = 10, batches: Int = 8): (Long, Double) = {
     import spark.implicits._
@@ -103,14 +114,14 @@ object StreamingBench {
       // block serializes the row decode + shuffle write on one task.
       // feedBlocks > 1 splits each micro-batch across that many blocks
       // (diagnostic knob; default 1 = historical feed shape)
-      val feedBlocks =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_FEED_BLOCKS", "1").toInt
+      val feedBlocks = sys.env.get("SPARK_GRAFT_STREAM_FEED_BLOCKS")
+        .fold(1)(v => v.toIntOption.filter(_ >= 1).getOrElse(
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_STREAM_FEED_BLOCKS must be a positive integer, got '$v'")))
       val t0 = System.nanoTime()
       var ingested = 0L
-      main.grouped(math.max(1, main.length / batches)).foreach { batch =>
-        if (feedBlocks <= 1) ms.addData(batch.toSeq)
-        else batch.grouped(math.max(1, batch.length / feedBlocks))
-          .foreach(b => ms.addData(b.toSeq))
+      splitEven(main, batches).foreach { batch =>
+        splitEven(batch, feedBlocks).foreach(b => ms.addData(b.toSeq))
         q.processAllAvailable()
       }
       ingested = q.recentProgress.map(_.numInputRows).sum

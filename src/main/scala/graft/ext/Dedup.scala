@@ -1610,9 +1610,11 @@ object Dedup {
     * merge: linkage is the pair-mining face of entity resolution, exactly
     * as [[minhashPairs]] is for near-dup text.
     *
-    * Scale shape: ONE shuffle on the blocking key builds candidate lists;
-    * per-pair scoring joins only (id, token-hash set, exact-field)
-    * tuples — full records never shuffle. In-block pairing is O(b²) per
+    * Scale shape: ONE shuffle on the blocking key carries each record's
+    * scoring payload (id, token-hash sets, exact fields) — full records
+    * never shuffle — and every in-block pair scores inside that block
+    * stage, before the threshold filter; no per-pair join runs. In-block
+    * pairing is O(b²) per
     * block UNTIL b crosses [[maxBucketFanout]], after which the block
     * emits only O(b) star candidates anchored at its min id — measured
     * saturating (ScaleSpec: 10× the block size past the cap cost 1.5×
@@ -1671,8 +1673,9 @@ object Dedup {
     * one call. Candidates normalize to id_a < id_b and dedupe across
     * passes, so overlapping passes cost one score each. Scale shape is
     * per-pass candidate generation (each documented on its pass type)
-    * plus the single (id, token-hash set) scoring join of
-    * [[recordLinkage]].
+    * plus one (id, token-hash set) scoring join over the deduped
+    * candidates; a single [[KeyBlocking]] pass skips the join and scores
+    * inside its block stage (the [[recordLinkage]] shape).
     */
   def recordLinkageMultiPass(records: DataFrame, idCol: String,
                              passes: Seq[BlockingPass],

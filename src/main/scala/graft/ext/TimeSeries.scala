@@ -514,10 +514,11 @@ object TimeSeries {
     * double expression in any engine; callers that hash-compare across
     * engines should round `v`.
     *
-    * Scale shape: identical to [[resampleLocf]] plus one extra window
-    * pass in the OPPOSITE direction (following frame) for the next
-    * neighbor — still a single hash exchange on the key (both windows
-    * share partitioning; the second sort is a re-sort, not a shuffle).
+    * Scale shape: one map-side-combined (key, bucket) max-struct
+    * shuffle, then ONE per-key window whose two `lead()`s give each
+    * observation its successor's bucket and value; each segment
+    * `explode`s its gap buckets and interpolates inline — no grid join,
+    * no second window pass, one hash exchange on the key.
     */
   def resampleInterp(events: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, bucketSeconds: Long): DataFrame = {

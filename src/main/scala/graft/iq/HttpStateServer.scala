@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions.col
   *                                     collect unbounded rows to the driver)
   *   GET /store/{name}/{col}/{key}[?limit=N] → point lookup, JSON array
   *
+  * Both routes read a running query's memory sink on the driver, with no
+  * Spark job per request; every other store answers through Spark SQL
+  * (see [[InteractiveQueries.lookup]]). Bodies are the same either way.
+  *
   * Single-driver Spark owns all state, so the reference's shard-owner
   * forwarding collapses to local serving; multi-driver deployments plug
   * their routing into [[InteractiveQueries.handler]].
@@ -61,7 +65,7 @@ object HttpStateServer {
             })
             .getOrElse(1000)
           require(limit > 0, s"limit must be positive, got $limit")
-          (200, df.limit(limit).toJSON.collect().mkString("[", ",", "]"))
+          (200, InteractiveQueries.json(df, limit).mkString("[", ",", "]"))
         } catch {
           case e: Exception =>
             (404, s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}""")

@@ -2,13 +2,15 @@ package graft.iq
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftfn.MemorySinkReads
 
 /** Interactive queries over materialized state — the analog of
   * `src/cddr/ksml/ring.clj`: the reference routes an HTTP point-lookup to
   * whichever Kafka Streams instance owns the key's state shard
   * (`ring.clj:20-53`). In Spark, state materialized through a memory sink
-  * (or any table sink) is queryable on the driver with plain SQL, so the
-  * shard-routing layer collapses; we keep the reference's handler shape
+  * (or any table sink) is queryable on the driver — a running query's
+  * memory sink straight from its rows, any other table with plain SQL — so
+  * the shard-routing layer collapses; we keep the reference's handler shape
   * (findHost / remote / local) as a façade for multi-driver deployments.
   *
   * Note: `ring.clj:15-18`'s `remote?` returns true when the owner equals
@@ -20,10 +22,23 @@ object InteractiveQueries {
   /** All rows of a materialized store (memory-sink query name or temp view). */
   def store(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
-  /** Point lookup by key — the `ReadOnlyKeyValueStore.get` analog. */
+  /** Point lookup by key — the `ReadOnlyKeyValueStore.get` analog. A
+    * running query's memory sink answers from the rows it holds on the
+    * driver (no Spark job); any other store runs the lookup as Spark SQL.
+    */
   def lookup(spark: SparkSession, name: String, keyCol: String,
-             key: Any): Array[Row] =
-    store(spark, name).where(col(keyCol) === key).collect()
+             key: Any): Array[Row] = {
+    val df = store(spark, name).where(col(keyCol) === key)
+    MemorySinkReads.collect(df).getOrElse(df.collect())
+  }
+
+  /** At most `limit` rows of `df` (a [[store]], optionally under one
+    * `where`) as `Dataset.toJSON` strings — the body rows of every
+    * [[HttpStateServer]] route, read like [[lookup]].
+    */
+  private[iq] def json(df: DataFrame, limit: Int): Array[String] =
+    MemorySinkReads.toJson(df, limit)
+      .getOrElse(df.limit(limit).toJSON.collect())
 
   /** State of a CHECKPOINTED streaming query read straight from its
     * checkpoint via Spark's state data source

@@ -181,42 +181,6 @@ class CompilerSpec extends SparkSpecBase {
     assert(wall.df.where(col("ts").isNull).count() == 0)
   }
 
-  test("materialized name registers a queryable store (IQ parity)") {
-    val node = CountOp(
-      stream(Seq("events"), consumed).groupBy(col("event_type")),
-      as = "n",
-      materialized = Some(Materialized(name = Some("type_counts"))))
-    Compiler.compile(node, env)
-    val viaIq = graft.iq.InteractiveQueries.lookup(
-      spark, "type_counts", "event_type", "click")
-    assert(viaIq.length == 1)
-    assert(viaIq.head.getAs[Long]("n") ==
-      events.where(col("event_type") === "click").count())
-  }
-
-  test("http state server serves point lookups (ring.clj surface)") {
-    val node = CountOp(
-      stream(Seq("events"), consumed).groupBy(col("event_type")),
-      as = "n",
-      materialized = Some(Materialized(name = Some("http_counts"))))
-    Compiler.compile(node, env)
-    val (server, port) = graft.iq.HttpStateServer.start(spark)
-    try {
-      val client = java.net.http.HttpClient.newHttpClient()
-      val resp = client.send(
-        java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(s"http://localhost:$port/store/http_counts/event_type/click")).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      assert(resp.statusCode() == 200)
-      assert(resp.body().contains("\"event_type\":\"click\""))
-      val bad = client.send(
-        java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(s"http://localhost:$port/store/no_such_store")).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      assert(bad.statusCode() == 404)
-    } finally server.stop(0)
-  }
-
   test("repartition applies the requested partitioning") {
     val f = Compiler.compile(
       stream(Seq("events"), consumed)

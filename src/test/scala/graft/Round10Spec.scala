@@ -261,56 +261,6 @@ class Round10Spec extends SparkSpecBase {
     assert(out(4L) == "4111-1111-1111-1111")
   }
 
-  test("multi-instance IQ routing: two state servers over isolated " +
-    "sessions each own one shard; the ring handler hops to the owner " +
-    "over REAL HTTP and serves locally when self owns the key") {
-    import graft.iq.{HttpStateServer, InteractiveQueries}
-    import InteractiveQueries.HostInfo
-    // two "instances": newSession() gives each its own temp-view catalog
-    // over the shared context — instance A genuinely cannot see B's
-    // shard, so the remote hop is REQUIRED, not decorative
-    val rows = (1L to 20L).map(i => (i, s"v$i"))
-    def shardOf(k: Long): Int = (k % 2).toInt
-    val sessions = Seq(spark.newSession(), spark.newSession())
-    sessions.zipWithIndex.foreach { case (s, i) =>
-      import s.implicits._
-      rows.filter(r => shardOf(r._1) == i).toDF("k", "v")
-        .createOrReplaceTempView("iq_store")
-    }
-    val (srvA, portA) = HttpStateServer.start(sessions(0))
-    val (srvB, portB) = HttpStateServer.start(sessions(1))
-    try {
-      val hosts = Array(HostInfo("127.0.0.1", portA),
-        HostInfo("127.0.0.1", portB))
-      def httpGet(h: HostInfo, key: String): String = {
-        val url = java.net.URI
-          .create(s"http://${h.host}:${h.port}/store/iq_store/k/$key").toURL
-        val in = url.openStream()
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
-      // the wrong host really misses: ownership is physical, not styled
-      assert(httpGet(hosts(0), "1") == "[]",
-        "instance A must not see B's shard")
-      assert(httpGet(hosts(1), "1").contains("\"v\":\"v1\""))
-      // ring.clj:40-53 handler with the intended (non-inverted) remote?
-      // semantics: self = A; A's keys serve locally, B's hop over HTTP
-      var localCalls = 0
-      var remoteCalls = 0
-      val route = InteractiveQueries.handler[String](
-        findHost = k => hosts(shardOf(k.toLong)),
-        remote = (h, k) => { remoteCalls += 1; httpGet(h, k) },
-        local = k => { localCalls += 1; httpGet(hosts(0), k) },
-        self = hosts(0))
-      rows.foreach { case (k, v) =>
-        val body = route(k.toString)
-        assert(body.contains(s""""v":"$v""""), s"key $k got $body")
-      }
-      assert(localCalls == rows.count(r => shardOf(r._1) == 0))
-      assert(remoteCalls == rows.count(r => shardOf(r._1) == 1))
-    } finally { srvA.stop(0); srvB.stop(0) }
-  }
-
   test("contaminationBySuiteStream: stateless ingest census — the union " +
     "of per-batch censuses equals the batch census of the union") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -240,31 +240,6 @@ class Round4Spec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  // ---- VERDICT #6: HTTP state server bounds full-store collects ----
-
-  test("http state server caps full-store GET at the limit param") {
-    (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-      .createOrReplaceTempView("big_store_r4")
-    val (server, port) = graft.iq.HttpStateServer.start(spark)
-    try {
-      val client = java.net.http.HttpClient.newHttpClient()
-      def get(path: String): String = client.send(
-        java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(s"http://localhost:$port$path")).build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString()).body()
-      def count(body: String): Int =
-        if (body == "[]") 0 else body.count(_ == '{')
-      // default cap: 1000 rows, not the whole 5000-row store
-      assert(count(get("/store/big_store_r4")) == 1000)
-      // explicit limit respected, both smaller and larger
-      assert(count(get("/store/big_store_r4?limit=7")) == 7)
-      assert(count(get("/store/big_store_r4?limit=10000")) == 5000)
-      // point queries unchanged (and also bounded)
-      val pt = get("/store/big_store_r4/k/42")
-      assert(count(pt) == 1 && pt.contains("\"v\":\"v42\""))
-    } finally server.stop(0)
-  }
-
   // ---- VERDICT #7: bound the approx-distinct estimate's error ----
 
   test("agg_approx_distinct estimate is within HLL's error bound of exact") {

@@ -243,4 +243,15 @@ class StreamingSpec extends SparkSpecBase {
     try q.processAllAvailable() finally q.stop()
     assert(spark.table("runner_out").count() == 1)
   }
+
+  test("StreamingBench.splitEven cuts exactly n contiguous parts") {
+    for (len <- Seq(1, 7, 10, 124, 1000); n <- Seq(1, 3, 4, 6, 8, 2000)) {
+      val xs = (0 until len).toArray
+      val parts = StreamingBench.splitEven(xs, n)
+      assert(parts.length == n.min(len), s"len $len, n $n")
+      assert(parts.forall(_.nonEmpty))
+      assert(parts.map(_.length).max - parts.map(_.length).min <= 1)
+      assert(parts.flatten.toSeq == xs.toSeq)
+    }
+  }
 }
