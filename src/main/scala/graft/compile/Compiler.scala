@@ -3,6 +3,7 @@ package graft.compile
 import graft.ast._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.ParquetFooters
 
 /** A compiled stream: a DataFrame plus the record-model metadata the DSL
   * tracks across operators — which columns form the key (Kafka's partition
@@ -30,6 +31,10 @@ trait Env {
   /** All known topic names — for pattern subscription (`eval_test.clj:36`). */
   def topicNames: Seq[String]
   def isStreaming: Boolean
+  /** An upper bound on the rows `load(topic)` returns, known without
+    * running a Spark job; None where no such bound is known.
+    */
+  def rowBound(topic: String): Option[Long] = None
 }
 
 final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
@@ -39,19 +44,30 @@ final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
   // parquet footer so the convention is data-driven, not name-driven.
   spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  // Each topic's footers are read once, on the driver: they give the schema
+  // (no inference job), the nano columns and the row bound.
+  private val footers =
+    scala.collection.concurrent.TrieMap[String, Option[ParquetFooters.Summary]]()
+  private def footer(topic: String): Option[ParquetFooters.Summary] =
+    footers.getOrElseUpdate(topic, ParquetFooters.summary(spark, path(topic)))
+  private def path(topic: String) = s"$dir/$topic.parquet"
+
   def load(topic: String): DataFrame = {
-    val path = s"$dir/$topic.parquet"
-    val df = spark.read.parquet(path)
-    nanoTimestampCols(path).foldLeft(df)((d, c) =>
-      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)")))
+    val f = footer(topic)
+    val df = ParquetFooters.read(spark, path(topic), f)
+    f.fold(nanoTimestampCols(path(topic)))(_.nanoTimestampCols)
+      .foldLeft(df)((d, c) =>
+        d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)")))
   }
 
+  override def rowBound(topic: String): Option[Long] = footer(topic).map(_.rows)
+
+  /** Nano columns of a layout the footer summary falls back on: the first
+    * part file's footer.
+    */
   private def nanoTimestampCols(path: String): Seq[String] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-    import scala.jdk.CollectionConverters._
     val f = new java.io.File(path)
     val first =
       if (f.isFile) Some(f)
@@ -61,13 +77,8 @@ final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
         new org.apache.hadoop.fs.Path(file.getAbsolutePath),
         spark.sparkContext.hadoopConfiguration)
       val reader = ParquetFileReader.open(in)
-      try reader.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
-        case field if field.isPrimitive &&
-            (field.getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-              case _ => false
-            }) => field.getName
-      } finally reader.close()
+      try ParquetFooters.nanoTimestampCols(reader.getFileMetaData.getSchema)
+      finally reader.close()
     }
   }
 
@@ -77,6 +88,16 @@ final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
   }
   def isStreaming: Boolean = false
+}
+
+object ParquetEnv {
+
+  /** `spark.read.parquet(path)` with the schema taken from the part-file
+    * footers on the driver, so building the frame starts no Spark job; a
+    * layout Spark would read differently keeps the inference.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    ParquetFooters.read(spark, path, ParquetFooters.summary(spark, path))
 }
 
 /** Batch env over a directory of `<topic>.<format>` files in any
@@ -196,14 +217,19 @@ object Compiler {
       // upsert-heavy changelog can compact far below its raw row count) and
       // bounds the action with limit(maxRows+1) so a non-parquet source
       // never pays a full scan at compile time — the count stops as soon as
-      // the limit is hit.
+      // the limit is hit. No count runs when the env's row bound is already
+      // within the guard: decoding adds no rows and compaction only removes
+      // them.
       val compacted =
         if (unique) df else compact(df, keys, consumed.eventTime)
       val maxRows =
         env.spark.conf.getOption("graft.globalTable.maxRows")
           .map(_.toLong).getOrElse(10000000L)
       val lim = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-      val n = if (df.isStreaming) -1L else compacted.limit(lim).count()
+      val n =
+        if (df.isStreaming) -1L
+        else env.rowBound(topic).filter(_ <= maxRows)
+          .getOrElse(compacted.limit(lim).count())
       require(n <= maxRows,
         s"global table '$topic' has more than $maxRows compacted rows, over " +
         s"the broadcast guard (graft.globalTable.maxRows). GlobalKTables are " +

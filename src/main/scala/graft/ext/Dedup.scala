@@ -1711,7 +1711,9 @@ object Dedup {
     // id-first struct sort makes position order = id order (so id_a <
     // id_b exactly as before), past-cap blocks emit the same star pairs
     // anchored at the block-min id, and the score expression is
-    // term-for-term the one the join path evaluated.
+    // term-for-term the one the join path evaluated. Dirty input that
+    // repeats an id in a block emits no (x, x) pair: both pair kinds drop
+    // equal ids before scoring, as the join path's normalization does.
     passes match {
       case Seq(KeyBlocking(cs)) =>
         import org.apache.spark.sql.expressions.Window
@@ -1731,6 +1733,7 @@ object Dedup {
           .where(size(col("arr")) > 1)
           .select(graft.functions.VectorFunctions.ordered_pairs(col("arr")))
           .select(col("id_a").as("pa"), col("id_b").as("pb"))
+          .where(col("pa.id") =!= col("pb.id"))
         val starPairs = base
           .where(col("__bn") > maxBucketFanout &&
             col("id") =!= col("__anchor.id"))

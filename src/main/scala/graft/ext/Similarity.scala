@@ -65,6 +65,7 @@ object Similarity {
     * centroid array, one narrow map over the corpus).
     */
   private[ext] def nearestOf(centers: Array[Array[Double]])(v: Seq[Double]): Int = {
+    if (centers.length == 1) return 0 // nearest of one: see IvfModel
     val a = v.toArray // bulk-copy: generic Seq apply boxes every access
     var best = 0; var bd = Double.MaxValue; var c = 0
     while (c < centers.length) {
@@ -295,6 +296,12 @@ object Similarity {
     * centroid. Driver-small (nlist × dim doubles), serializable into task
     * closures — fit ONCE per corpus with [[fitIvf]] and reuse across every
     * query batch; a production pipeline never retrains per query.
+    *
+    * An untrained `nlist == 1` model (what [[fitIvf]] and [[fitIvfAuto]]
+    * return when the policy resolves to one cell) holds the placeholder
+    * centroid `Array(0.0)`, which does NOT carry the embedding dimension:
+    * nearest-of-one assignment is cell 0 for a vector of any dimension,
+    * and nothing may read the centroid's length as the corpus dimension.
     */
   case class IvfModel(centers: Array[Array[Double]]) {
     def nlist: Int = centers.length

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.compile.ParquetEnv
 import graft.ext.{Dedup, Funnel, IntervalJoin, Layout, Multimodal, Pipeline, Similarity, Sketches, TextAnalysis, TimeSeries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,9 +15,9 @@ private[queries] object ExtShared {
 
 
   def docs(s: SparkSession, d: String) =
-    s.read.parquet(s"$d/documents.parquet")
+    ParquetEnv.read(s, s"$d/documents.parquet")
   def emb(s: SparkSession, d: String) =
-    s.read.parquet(s"$d/embeddings.parquet")
+    ParquetEnv.read(s, s"$d/embeddings.parquet")
 
   /** Deterministic noisy-annotation fixture for the label-aggregation
     * gates (the text_url_parse derive-from-documents pattern): 5

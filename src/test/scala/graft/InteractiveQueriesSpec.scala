@@ -7,8 +7,6 @@ import graft.iq.{HttpStateServer, InteractiveQueries}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -43,35 +41,6 @@ class InteractiveQueriesSpec extends SparkSpecBase {
 
   private def servesFromSink(name: String): Boolean =
     MemorySinkReads.servesFromSink(spark.table(name))
-
-  /** Spark jobs started while `body` runs, streaming micro-batches
-    * excluded. A marker job run after `body` flushes the listener bus:
-    * events arrive in order, so once the marker's start is seen every
-    * earlier job's start has been counted.
-    */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"iq-spec-marker-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == marker))
-          markerSeen.countDown()
-        else if (p.forall(_.getProperty("sql.streaming.queryId") == null))
-          jobs.incrementAndGet()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup(marker, "listener-bus flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   // ---- memory-sink reads: driver path ≡ SQL path ----
 
